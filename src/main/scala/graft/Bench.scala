@@ -11,36 +11,21 @@ import org.apache.spark.sql.SparkSession
   *
   * Comparability (r8): 338 queries × 2 in ONE JVM accumulate enough
   * heap/GC pressure to inflate late-suite warm timings up to ~3×
-  * (r7's phantom "regressions" — BenchOne showed the same queries
+  * (r7's phantom "regressions" — solo runs showed the same queries
   * flat). Two fixes:
-  *   - the suite runs in CHUNKS of `SPARK_GRAFT_BENCH_CHUNK` queries
-  *     (default 90), each in a FRESH child JVM with the same classpath
-  *     and session shape (warmed exactly like the single-JVM bench, so
-  *     cold/warm semantics are unchanged); the parent merges the
-  *     per-chunk results into the same single JSON line. Chunk size 0
-  *     restores the old inline single-JVM mode, and any child failure
-  *     falls back to running that chunk inline.
+  *   - the suite runs in CHUNKS of 90 queries, each in a FRESH child
+  *     JVM with the same classpath, JVM flags and session (warmed
+  *     before its first timed query, so cold/warm semantics hold per
+  *     chunk); the parent merges the per-chunk results. A chunk whose
+  *     child fails runs inline in the parent instead.
   *   - a per-query `gc` dict (seconds of JVM GC time during the warm
   *     run, from the collector MXBeans) so any residual inflation is
   *     visible in the artifact instead of masquerading as plan cost.
   */
 object Bench {
 
-  private def newSession(sfDirIgnored: String, cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // broadcast/shuffle state is reclaimed by the ContextCleaner only
-      // when a GC actually runs, and the default periodicGC interval
-      // (30 min) never fires inside a bench chunk — tighten it so
-      // late-chunk queries aren't taxed by the accumulated heap
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
+  private def newSession(): SparkSession = {
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -89,9 +74,8 @@ object Bench {
 
   /** Child-JVM entry: bench the keys in SPARK_GRAFT_BENCH_KEYS, write
     * name/cold/warm/gc TSV to SPARK_GRAFT_BENCH_OUT. */
-  private def childMain(sfDir: String, cpus: String, keysCsv: String,
-      outPath: String): Unit = {
-    val spark = newSession(sfDir, cpus)
+  private def childMain(sfDir: String, keysCsv: String, outPath: String): Unit = {
+    val spark = newSession()
     val rs = runKeys(spark, sfDir, keysCsv.split(',').toSeq.filter(_.nonEmpty))
     val body = rs.map(r => s"${r._1}\t${r._2}\t${r._3}\t${r._4}").mkString("\n")
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
@@ -100,33 +84,20 @@ object Bench {
   }
 
   /** Spawn a fresh JVM for one chunk; None if the child failed. */
-  private def runChunkInChild(sfDir: String, cpus: String,
+  private def runChunkInChild(sfDir: String,
       keys: Seq[String]): Option[Seq[(String, Double, Double, Double)]] = {
     try {
       val out = java.nio.file.Files.createTempFile("graft_bench_", ".tsv")
       val log = java.nio.file.Files.createTempFile("graft_bench_", ".log")
-      val javaBin = s"${System.getProperty("java.home")}/bin/java"
-      // mirror build.sbt's run JVM exactly: same add-opens set and heap
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .map(p => s"--add-opens=$p=ALL-UNNAMED")
-      val cmd = Seq(javaBin, "-cp", System.getProperty("java.class.path")) ++
-        addOpens ++ Seq(
-          s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-          "-Dspark.ui.enabled=false",
-          "-Dspark.sql.session.timeZone=UTC",
-          "graft.Bench")
       import scala.jdk.CollectionConverters._
+      // the child runs with this JVM's own flags (heap, add-opens, -D)
+      val cmd = Seq(s"${System.getProperty("java.home")}/bin/java",
+        "-cp", System.getProperty("java.class.path")) ++
+        java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
+        Seq("graft.Bench")
       val pb = new ProcessBuilder(cmd.asJava)
       val env = pb.environment()
       env.put("SPARK_GRAFT_SF_DIR", sfDir)
-      env.put("SPARK_GRAFT_CPUS", cpus)
       env.put("SPARK_GRAFT_BENCH_KEYS", keys.mkString(","))
       env.put("SPARK_GRAFT_BENCH_OUT", out.toString)
       pb.redirectOutput(log.toFile).redirectErrorStream(true)
@@ -136,7 +107,6 @@ object Bench {
         return None
       }
       val lines = java.nio.file.Files.readAllLines(out)
-      import scala.jdk.CollectionConverters._
       val parsed = lines.asScala.toSeq.filter(_.nonEmpty).map { l =>
         val f = l.split('\t')
         (f(0), f(1).toDouble, f(2).toDouble, f(3).toDouble)
@@ -154,57 +124,34 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     (sys.env.get("SPARK_GRAFT_BENCH_KEYS"), sys.env.get("SPARK_GRAFT_BENCH_OUT")) match {
-      case (Some(keys), Some(out)) => childMain(sfDir, cpus, keys, out); return
+      case (Some(keys), Some(out)) => childMain(sfDir, keys, out); return
       case _ =>
     }
-    val chunkSize = sys.env.getOrElse("SPARK_GRAFT_BENCH_CHUNK", "90").toInt
     // optional args = key filter (targeted benching, like Verify's)
-    val allKeys = {
-      val keys = SparkEntry.queries.keys.toSeq.sorted
-      if (args.isEmpty) keys
-      else {
-        val want = args.toSet
-        val unknown = want -- keys.toSet
-        require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
-        keys.filter(want)
-      }
-    }
+    val allKeys = SparkEntry.selectKeys(args.toSeq)
     val results: Seq[(String, Double, Double, Double)] =
-      if (chunkSize <= 0) {
-        val spark = newSession(sfDir, cpus)
-        try runKeys(spark, sfDir, allKeys) finally spark.stop()
-      } else {
-        allKeys.grouped(chunkSize).toSeq.flatMap { chunk =>
-          runChunkInChild(sfDir, cpus, chunk).getOrElse {
-            // degraded but correct: run the chunk inline in this JVM
-            val spark = newSession(sfDir, cpus)
-            try runKeys(spark, sfDir, chunk) finally spark.stop()
-          }
+      allKeys.grouped(90).toSeq.flatMap { chunk =>
+        runChunkInChild(sfDir, chunk).getOrElse {
+          // degraded but correct: run the chunk inline in this JVM
+          val spark = newSession()
+          try runKeys(spark, sfDir, chunk) finally spark.stop()
         }
       }
     def dict(f: ((String, Double, Double, Double)) => Double): String =
       results.map(r => s"\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val warmTotal = results.map(_._3).sum
+    // Every key's cold/warm/gc goes to the detail file only: the driver
+    // artifact keeps just the LAST ~2000 chars of stdout, and 351 key
+    // names alone are ~4.7 KB, so stdout carries one COMPACT parseable
+    // {"metric"...} line — exact totals plus the top-N slowest-warm
+    // keys' cold/warm dicts, sized to stay inside the capture window.
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""queries":${dict(_._2)},"warm":${dict(_._3)},"gc":${dict(_._4)},""" +
       s""""warm_total":$warmTotal,"sf":"$sfDir"}"""
-    // The historical single-line contract, with every key — kept for
-    // tools (grep -o '{"metric".*' takes the FIRST match = this line).
-    println(fullLine)
-    // r17: the driver artifact keeps only the LAST ~2000 chars of
-    // stdout, so for 16 rounds the ~20 KB line above never reached the
-    // driver's parser (BENCH_r01..r16 all have parsed:null). 351 key
-    // names alone are ~4.7 KB — no encoding of the full dict fits the
-    // window. Fix: persist the full JSON to a file, and end stdout with
-    // a COMPACT parseable {"metric"...} line — exact totals plus the
-    // top-N slowest-warm keys' cold/warm dicts, sized to stay inside
-    // the capture window. Same semantics, same keys, same numbers; the
-    // full line above is unchanged.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON",
-      s"bench_out/bench_full_${cpus}cpu.json")
+      s"bench_out/bench_full_${Sessions.cpus}cpu.json")
     val wrote = try {
       val p = java.nio.file.Paths.get(detailPath)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
@@ -212,7 +159,7 @@ object Bench {
       detailPath
     } catch { case _: Throwable =>
       try {
-        val p = java.nio.file.Paths.get(s"/tmp/graft_bench_full_${cpus}cpu.json")
+        val p = java.nio.file.Paths.get(s"/tmp/graft_bench_full_${Sessions.cpus}cpu.json")
         java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
         p.toString
       } catch { case _: Throwable => "unwritable" }

@@ -610,15 +610,9 @@ object Cli {
     case "--service" :: infoFile :: rest =>
       println(proxy(infoFile, rest))
     case _ =>
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      // the master is a deployment setting: a cluster address overrides local
+      val b = Sessions.builder()
+      val spark = sys.env.get("SPARK_GRAFT_MASTER").fold(b)(b.master).getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       println(run(spark, args))
       spark.stop()

@@ -1,11 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps formatted physical plans for the headline queries so the scale
   * properties (pushdown, broadcast, codegen spans, shuffle count) can be
-  * audited: runMain graft.PlanAudit <sfDir> <outFile>.
+  * audited: runMain graft.PlanAudit <sfDir> <outFile> [key ...] — the
+  * named keys instead of [[audited]] when given. (Iterative-loop
+  * operators materialize eagerly at construction; the dump then shows
+  * the final readout plan.)
   */
 object PlanAudit {
   val audited: Seq[String] = Seq(
@@ -356,22 +358,18 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/tmp/plans.txt"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val keys = if (args.length > 2) SparkEntry.selectKeys(args.drop(2).toSeq) else audited
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    audited.foreach { name =>
+    keys.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n================ $name ================\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
+      // one key's tracked persists must not show up in the next key's plan
+      Caches.release()
+      spark.catalog.clearCache()
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-probe main for streaming STATE-STORE behavior: replays the
   * events corpus as a time-ordered multi-batch stream through
   * `dropDuplicatesWithinWatermark`
@@ -19,21 +17,7 @@ object ProbeStreamState {
     require(args.nonEmpty, "usage: ProbeStreamState <sfDir> [nFiles]")
     val dir = args(0)
     val nFiles = if (args.length > 1) args(1).toInt else 30
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // same provider hook as BenchOne: RocksDB = the off-heap
-    // production state store
-    val spark = sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
-      .fold(b)(p => b.config("spark.sql.streaming.stateStore.providerClass", p))
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val mode = if (args.length > 2) args(2) else "dedup"
     for (leg <- Seq("cold", "warm")) {

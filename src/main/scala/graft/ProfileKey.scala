@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftext.ListenerBus
 
 /** Optimization-round instrument (guide §1/§7): run one query cold+warm
   * with a stage listener attached and print, for the WARM run, every
@@ -15,16 +15,7 @@ object ProfileKey {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     case class St(stageId: Int, nameLine: String, wallMs: Long, taskMs: Long,
@@ -81,8 +72,10 @@ object ProfileKey {
     val t1 = System.nanoTime()
     SparkEntry.queries(name)(spark, dir).count()
     val warm = (System.nanoTime() - t1) / 1e9
+    // every stage, task and query-execution event of the warm run is
+    // delivered before the tables below are read
+    ListenerBus.drain(spark.sparkContext)
     Caches.release(); spark.catalog.clearCache()
-    Thread.sleep(500) // let the listener bus drain the last stage events
     println(f"$name warm: $warm%.2f s  (stages=${stages.size}, jobs=${jobs.size})")
     val totWall = stages.map(_.wallMs).sum
     println(f"sum-of-stage-wall: ${totWall / 1e3}%.2f s (gaps to warm = driver/plan/schedule time)")
@@ -98,6 +91,13 @@ object ProfileKey {
         f"in=${s.inRows}%9d/${mb(s.inBytes)}%8sMB shRd=${s.shRdRows}%9d/${mb(s.shRdBytes)}%8sMB " +
         f"shWr=${s.shWrRows}%9d/${mb(s.shWrBytes)}%8sMB spill=${mb(s.spillMem)}/${mb(s.spillDisk)}MB  ${s.nameLine.take(80)}")
     }
+    // JVM-lifetime PEAK across all heap pools: the worst moment of
+    // either leg, the scale-probe heap evidence
+    import scala.jdk.CollectionConverters._
+    val peak = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .asScala.filter(_.getType == java.lang.management.MemoryType.HEAP)
+      .map(_.getPeakUsage.getUsed).sum
+    println(f"$name peak_heap_mb: ${peak / 1048576}%d")
     spark.stop()
   }
 }

@@ -14,6 +14,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1Agg(spark, "/root/testdata/sf0.001")
 
+  /** The registered keys a harness main runs, sorted: all of them when
+    * `want` is empty, else exactly `want`. An unknown key fails, so a
+    * typo cannot pass as an empty run. */
+  def selectKeys(want: Seq[String]): Seq[String] = {
+    val keys = queries.keys.toSeq.sorted
+    val unknown = want.filterNot(keys.contains).distinct
+    require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
+    if (want.isEmpty) keys else keys.filter(want.toSet)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // core relational (SURVEY §2 row 19, row 1, row 11)

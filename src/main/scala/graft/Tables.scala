@@ -8,47 +8,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType, TimestampNTZType, Time
   * Mirrors kiara's "onboarding" idea (values come from a store, not ad-hoc
   * paths): every operator takes (spark, sfDir) and resolves tables here.
   */
-/** Shared session-sizing knobs for every runner main (Bench/Verify/
-  * BenchOne/Debug/audit tools), so plans are identical across the
-  * harness. */
-object Sessions {
-  /** Parquet open-cost charged per file when packing scan splits
-    * (`spark.sql.files.openCostInBytes`). Spark's 4 MB default floors
-    * maxSplitBytes at 4 MB, so the sub-11 MB single-file gate tables
-    * scan as 1–3 tasks and any heavy per-row stage chained onto the
-    * scan (tokenize+hash, embedding scoring) runs near-single-threaded
-    * — the r16 ProfileKey finding (a 5000-doc signature build on ONE
-    * core). At 16 KB, bytesPerCore = totalBytes/defaultParallelism
-    * takes over and small files split ~1 per core; at cluster scale
-    * bytesPerCore ≫ openCost, so maxSplitBytes stays maxPartitionBytes
-    * (128 MB) and behavior is UNCHANGED — a scale-adaptive setting,
-    * not a local[32] constant. `SPARK_GRAFT_OPEN_COST` overrides (a
-    * cluster on seek-bound disks with millions of tiny files may want
-    * Spark's default back). */
-  def openCostInBytes: String =
-    sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "16384")
-
-  /** Adaptive query execution default for harness sessions. AQE
-    * materializes every exchange as its OWN job behind a scheduling
-    * barrier — measured ~40–90 ms per extra job on this box, which at
-    * gate SFs (KB–MB shuffles, sub-second stages) buys nothing: there
-    * is nothing to coalesce, no join to re-plan, no skew to split,
-    * while the fixed cost multiplies across 351 short queries
-    * (text_bpe_train alone: 67 → 33 jobs, warm 6.4 → 4.3 s with AQE
-    * off). This is the short-query regime Spark's own tuning guidance
-    * flags for AQE overhead. At cluster scale the trade inverts
-    * (coalescing/skew handling dominate), so `SPARK_GRAFT_PROFILE=
-    * cluster` turns AQE back on — the r15 per-face state-store
-    * precedent: measured local default, measured cluster default, one
-    * profile switch. Explicit `SPARK_GRAFT_AQE` (true/false) beats the
-    * profile. */
-  def adaptiveEnabled: String =
-    sys.env.get("SPARK_GRAFT_AQE")
-      .orElse(if (sys.env.get("SPARK_GRAFT_PROFILE")
-          .exists(_.equalsIgnoreCase("cluster"))) Some("true") else None)
-      .getOrElse("false")
-}
-
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

@@ -31,6 +31,7 @@ class SkewSpec extends SparkTestBase {
     // cloned session: tuned-down skew thresholds must not leak into the
     // shared test session
     val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "true") // the premise under test
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set("spark.sql.shuffle.partitions", "8")
     s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "262144")

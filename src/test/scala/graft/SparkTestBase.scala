@@ -3,19 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM: the harness
+  * session ([[Sessions.builder]]) on four cores, with a private
+  * warehouse and broadcast joins off so the bucketed sort-merge join
+  * plans show. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = Sessions.builder(4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // let bucketed SMJ show
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
